@@ -31,6 +31,20 @@ object KpWinner {
   def pick(a: String, b: String): String =
     if (rank(a) < rank(b) || (rank(a) == rank(b) && a <= b)) a else b
   def pickAll(pts: Seq[String]): String = pts.reduce(pick)
+
+  /** Winning pass type per event id among one doc's keypass rows. */
+  def byEvent(kps: Seq[SpadlPipeline.Kp]): Map[Int, String] =
+    kps.groupBy(_.event_id).map { case (k, v) => k -> pickAll(v.map(_.pass_type)) }
+
+  /** The raw event with the flag its winning pass type sets: "key" ->
+    * keypass, "assisst" -> assist (sic, R/opta_events.R:96).
+    */
+  def flag(r: OptaRawEvent, passType: Option[String]): OptaRawEvent =
+    passType match {
+      case Some("key") => r.copy(keypass = true)
+      case Some("assisst") => r.copy(assist = true)
+      case _ => r
+    }
 }
 
 object SpadlPipeline {
@@ -50,15 +64,9 @@ object SpadlPipeline {
     val gameId = docId.toInt
     TokenCodec.decode(tokens) match {
       case TokenCodec.OptaGame(home, wires) =>
-        val byEvent: Map[Int, String] = kps.groupBy(_.event_id)
-          .map { case (k, v) => k -> KpWinner.pickAll(v.map(_.pass_type)) }
+        val byEvent = KpWinner.byEvent(kps)
         val raws = wires.map { w =>
-          val r = TokenCodec.toOptaRaw(gameId, home, w)
-          byEvent.get(w.event_id) match {
-            case Some("key") => r.copy(keypass = true)
-            case Some("assisst") => r.copy(assist = true) // sic, R/opta_events.R:96
-            case _ => r
-          }
+          KpWinner.flag(TokenCodec.toOptaRaw(gameId, home, w), byEvent.get(w.event_id))
         }
         OptaGameConverter.convert(raws)
       case TokenCodec.InstatGame(home, wires) =>
@@ -72,7 +80,15 @@ object SpadlPipeline {
   def convert(spark: SparkSession, docs: Dataset[TokenDoc],
       keypass: Option[Dataset[KeypassRow]] = None): Dataset[SpadlAction] = {
     import spark.implicits._
-    val withKp: Dataset[DocWithKp] = keypass match {
+    withKeypass(spark, docs, keypass)
+      .flatMap(d => convertDoc(d.doc_id, d.tokens, d.kps.getOrElse(Nil)))
+  }
+
+  /** Each doc with its keypass rows (`kps` null when there are none). */
+  private def withKeypass(spark: SparkSession, docs: Dataset[TokenDoc],
+      keypass: Option[Dataset[KeypassRow]]): Dataset[DocWithKp] = {
+    import spark.implicits._
+    keypass match {
       case Some(kp) =>
         // J1: aggregate the outcome stream per doc, then a single equi join
         // on doc_id (shuffle-hash/broadcast by size — Catalyst + AQE pick).
@@ -86,7 +102,6 @@ object SpadlPipeline {
           lit(null).cast("array<struct<event_id:int,pass_type:string>>").as("kps"))
           .as[DocWithKp]
     }
-    withKp.flatMap(d => convertDoc(d.doc_id, d.tokens, d.kps.getOrElse(Nil)))
   }
 
   /** Flat InStat event row — input of the declarative Catalyst conversion
@@ -132,31 +147,14 @@ object SpadlPipeline {
   def decodeOptaEvents(spark: SparkSession, docs: Dataset[TokenDoc],
       keypass: Option[Dataset[KeypassRow]] = None): Dataset[OptaRawEvent] = {
     import spark.implicits._
-    val withKp: Dataset[DocWithKp] = keypass match {
-      case Some(kp) =>
-        val kpAgg = kp.groupBy($"doc_id")
-          .agg(collect_list(struct($"event_id", $"pass_type")).as("kps"))
-        docs.join(kpAgg, Seq("doc_id"), "left")
-          .select($"doc_id", $"tokens", $"source", $"kps").as[DocWithKp]
-      case None =>
-        docs.select($"doc_id", $"tokens", $"source",
-          lit(null).cast("array<struct<event_id:int,pass_type:string>>").as("kps"))
-          .as[DocWithKp]
-    }
-    withKp.filter(_.source == "opta").flatMap { d =>
+    withKeypass(spark, docs, keypass).filter(_.source == "opta").flatMap { d =>
       val gameId = d.doc_id.toInt
-      val byEvent: Map[Int, String] = d.kps.getOrElse(Nil)
-        .groupBy(_.event_id)
-        .map { case (k, v) => k -> KpWinner.pickAll(v.map(_.pass_type)) }
+      val byEvent = KpWinner.byEvent(d.kps.getOrElse(Nil))
       TokenCodec.decode(d.tokens) match {
         case TokenCodec.OptaGame(home, wires) =>
           wires.zipWithIndex.map { case (w, i) =>
-            val r = TokenCodec.toOptaRaw(gameId, home, w, i)
-            byEvent.get(w.event_id) match {
-              case Some("key") => r.copy(keypass = true)
-              case Some("assisst") => r.copy(assist = true)
-              case _ => r
-            }
+            KpWinner.flag(TokenCodec.toOptaRaw(gameId, home, w, i),
+              byEvent.get(w.event_id))
           }
         case _ => Vector.empty
       }

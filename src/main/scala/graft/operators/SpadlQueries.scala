@@ -58,7 +58,7 @@ object SpadlQueries {
     val qs = spark.newSession()
     qs.conf.set("spark.sql.shuffle.partitions", "1")
     implicit val sq = qs.sqlContext
-    val base = 1704067200000L
+    val base = SpadlStream.BaseEpochMs
     val games = FixtureGen.corpus(NGames, EventsPerGame)
     val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc, base))
       .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
@@ -68,17 +68,6 @@ object SpadlQueries {
       "event_time")
     val out = SpadlStream.valuedActions(qs, mem.toDS(), Some(kpDf))
     val sinkName = "graft_stream_actions_sink"
-    val dbg = sys.env.contains("GRAFT_STREAM_QUERY_DEBUG")
-    val t0 = System.nanoTime()
-    def mark(what: String): Unit = if (dbg)
-      println(f"[streamActions +${(System.nanoTime() - t0) / 1e9}%.2fs] $what")
-    if (dbg) qs.streams.addListener(
-      new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-          mark(s"batch=${e.progress.batchId} rows=${e.progress.numInputRows} durMs=${e.progress.batchDuration} ${e.progress.durationMs}")
-        override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      })
     // every micro-batch here is ~0.8 s of pure machinery (state-store
     // commits for 4 join stores + 1 fmgws store, offset/commit WAL, plan +
     // task dispatch) against a 5k-row corpus, so the query's wall time is
@@ -99,16 +88,12 @@ object SpadlQueries {
     // Ordering is irrelevant to correctness (that's the watermark's job, and
     // StreamingSpec pins slicing-equivalence exhaustively); this is purely
     // the cheapest path through the trigger machinery.
-    def sentinel(i: Int, d: Int): SpadlStream.StreamEvent =
-      SpadlStream.StreamEvent(s"99$i", "opta", 0, 10, i,
-        new Timestamp(base + d * 86400000L),
-        Array(1, 1, 3, 0, 0, 1, 10, 1, 5000, 5000, 0), None)
     games.flatMap(_.keypasses).foreach { k =>
       kpMem.addData((k.doc_id, k.event_id, k.pass_type,
         new Timestamp(base + (k.event_time_sec * 1000).toLong)))
     }
     mem.addData(all)
-    mem.addData(sentinel(1, 30))
+    mem.addData(SpadlStream.sentinel(1, 30, base))
     kpMem.addData(("998", -1, "none", new Timestamp(base + 30 * 86400000L)))
     // throwaway checkpoint on tmpfs when available: this harness query's
     // per-batch cost is dominated by checkpoint I/O fsyncs (5 state-store
@@ -126,10 +111,8 @@ object SpadlQueries {
       .format("memory").queryName(sinkName).start()
     try {
       q.processAllAvailable()
-      mark("ingest + sentinel #1 drained")
       val rows = qs.table(sinkName).as[graft.model.ValuedAction]
         .collect().toSeq
-      mark(s"collected ${rows.size} rows")
       spark.createDataset(rows).toDF()
     } finally {
       q.stop()

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.codec.TokenCodec
-import graft.convert.{InstatGameConverter, OptaGameConverter}
+import graft.convert.{InstatGameConverter, KpWinner, OptaGameConverter}
 import graft.model._
 import graft.vaep.ValuationCore
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -117,12 +117,23 @@ object SpadlStream {
     }
   }
 
+  /** Epoch base (2024-01-01T00:00Z) of the fixture and bench stream clock. */
+  val BaseEpochMs = 1704067200000L
+
+  /** Far-future event `days` days after `base` that closes every open
+    * session: a period-3 Opta row, so the P1 filter drops it from output
+    * while it still advances the watermark. `i` keeps the doc ids apart.
+    */
+  def sentinel(i: Int, days: Int, base: Long = BaseEpochMs): StreamEvent =
+    StreamEvent(s"99$i", "opta", 0, 10, i, new Timestamp(base + days * 86400000L),
+      Array(1, 1, 3, 0, 0, 1, 10, 1, 5000, 5000, 0), None)
+
   /** Raw-event stream derived from token docs: the deterministic chunker
     * used by fixtures/benches (production would readStream the Iceberg
     * sequence table directly in this shape).
     */
   def toStreamEvents(doc: TokenDoc,
-      baseEpochMs: Long = 1704067200000L): Vector[StreamEvent] = {
+      baseEpochMs: Long = BaseEpochMs): Vector[StreamEvent] = {
     val (provider, home, groups) = TokenCodec.eventGroups(doc.tokens)
     groups.zipWithIndex.map { case (g, i) =>
       val gameSec: Long =
@@ -170,13 +181,8 @@ object SpadlStream {
     val gameId = key.toInt
     val ordered = window.sortBy(_.seq)
     val raws = ordered.map { b =>
-      val r = TokenCodec.toOptaRaw(gameId, home,
-        TokenCodec.decodeOptaGroup(b.group))
-      b.pass_type match {
-        case Some("key") => r.copy(keypass = true)
-        case Some("assisst") => r.copy(assist = true)
-        case _ => r
-      }
+      KpWinner.flag(TokenCodec.toOptaRaw(gameId, home,
+        TokenCodec.decodeOptaGroup(b.group)), b.pass_type)
     }
     val withSrc = OptaGameConverter.convertWithSrc(raws)
     val w = ordered.size // all in-play: period-filtered at accept time
@@ -236,7 +242,6 @@ object SpadlStream {
       lostUpgrades: Option[org.apache.spark.util.LongAccumulator] = None)(
       key: String, rows: Iterator[StreamEvent],
       state: GroupState[GameBuf]): Iterator[ValuedAction] = {
-    val dbg = sys.env.get("GRAFT_STATE_DEBUG").contains(key)
     if (state.hasTimedOut) {
       // session close: flush the remainder, drop the state
       val buf = state.get
@@ -246,9 +251,6 @@ object SpadlStream {
           optaEmit(key, buf.home, events, buf.emittedActions,
             buf.droppedPrefix, buf.carry, finalFlush = true).out
         else instatValued(key, buf.home, events)
-      if (dbg) println(s"[state $key] TIMEOUT buffered=${events.size} " +
-        s"emitted=${buf.emittedActions} dp=${buf.droppedPrefix} " +
-        s"flush=${out.map(_.action_idx).mkString(",")}")
       state.remove()
       return out.iterator
     }
@@ -331,9 +333,6 @@ object SpadlStream {
           optaEmit(key, home, events, buf0.emittedActions,
             buf0.droppedPrefix, buf0.carry, finalFlush = true).out
         else instatValued(key, home, events)
-      if (dbg) println(s"[state $key] IMMEDIATE CLOSE wm=$wm " +
-        s"buffered=${events.size} emitted=${buf0.emittedActions} " +
-        s"flush=${out.map(_.action_idx).mkString(",")}")
       state.remove()
       return out.iterator
     }
@@ -351,11 +350,6 @@ object SpadlStream {
       if (safe.size >= 2 && safeGrew) {
         val r = optaEmit(key, home, safe, buf0.emittedActions,
           buf0.droppedPrefix, buf0.carry, finalFlush = false)
-        if (dbg) println(s"[state $key] wm=$wm frontier=$frontier " +
-          s"safe=${safe.size} total=${events.size} fresh=${freshV.size} " +
-          s"emitted ${buf0.emittedActions}->${r.emittedActions} " +
-          s"keepFrom=${r.keepFrom} dp=${r.newDroppedPrefix} " +
-          s"out=${r.out.map(_.action_idx).mkString(",")}")
         val keep = safe.sortBy(optaSortKey).drop(r.keepFrom) ++
           events.filter(_.ts >= frontier)
         state.update(GameBuf.build(provider, home, r.emittedActions,

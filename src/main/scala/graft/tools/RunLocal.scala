@@ -4,7 +4,6 @@ import graft.fixtures.FixtureGen
 import graft.convert.SpadlPipeline
 import graft.vaep.Valuation
 import graft.features.Features
-import org.apache.spark.sql.SparkSession
 
 /** Local end-to-end drive of the public pipeline: generate the fixture token
   * table as parquet (the engine's real input shape), read it back, convert,
@@ -17,14 +16,7 @@ object RunLocal {
     val perGame = if (args.length > 1) args(1).toInt else 120
     val outDir = if (args.length > 2) args(2)
       else java.nio.file.Files.createTempDirectory("graft_demo").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-runlocal")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Kit.session(8, "graft-runlocal")
     import spark.implicits._
 
     // 1. write the input tables (token docs + keypass side stream)

@@ -5,7 +5,6 @@ import graft.streaming.{ExactlyOnceSink, SpadlStream, StateStores, StreamJob}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import java.sql.Timestamp
 
 /** End-to-end drive of the streaming job against a file source: phase 1
   * processes half the input then "crashes"; phase 2 restarts from the
@@ -21,24 +20,13 @@ object RunStream {
     val nGames = if (args.length > 0) args(0).toInt else 8
     val root = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("graft_stream").toString
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    StateStores.applyEnv(spark) // GRAFT_STATE=rocksdb selects RocksDB state
+    val spark = session()
     import spark.implicits._
 
-    val Base = 1704067200000L
     val games = FixtureGen.corpus(nGames, 120)
-    val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc, Base))
+    val all = games.flatMap(g => SpadlStream.toStreamEvents(g.doc))
       .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
     val (h, t) = all.splitAt(all.size / 2)
-    def sentinel(i: Int, d: Int) = SpadlStream.StreamEvent(s"99$i", "opta",
-      0, 10, i, new Timestamp(Base + d * 86400000L),
-      Array(1, 1, 3, 0, 0, 1, 10, 1, 5000, 5000, 0), None)
 
     val srcDir = s"$root/src"; val outDir = s"$root/out"; val ck = s"$root/ck"
     spark.createDataset(h).repartition(2).write.mode("overwrite")
@@ -46,11 +34,7 @@ object RunStream {
     val metrics = new StreamJob.EmitMetricsListener
     spark.streams.addListener(metrics)
 
-    def stream = spark.readStream
-      .schema(spark.createDataset(all).schema)
-      .option("maxFilesPerTrigger", "2")
-      .parquet(s"$srcDir/*")
-      .as[SpadlStream.StreamEvent]
+    def stream = Kit.eventStream(spark, srcDir, 2)
 
     println(s"[stream] phase 1: ${h.size} events")
     val q1 = StreamJob.start(spark, stream, outDir, ck,
@@ -62,18 +46,14 @@ object RunStream {
 
     println(s"[stream] phase 2: +${t.size} events + sentinels, restart from checkpoint")
     spark.createDataset(t).repartition(2).write.parquet(s"$srcDir/p2")
-    (1 to 3).foreach(i => spark.createDataset(Seq(sentinel(i, 29 + i)))
+    (1 to 3).foreach(i => spark.createDataset(Seq(SpadlStream.sentinel(i, 29 + i)))
       .write.parquet(s"$srcDir/s$i"))
     val q2 = StreamJob.start(spark, stream, outDir, ck,
       trigger = Trigger.AvailableNow(), metrics = Some(metrics))
     q2.awaitTermination(180000); q2.stop()
 
     val out = sink.read(spark)
-    val batchRows = games.map { g =>
-      graft.vaep.ValuationCore.value(
-        graft.convert.SpadlPipeline.convertDoc(g.doc.doc_id, g.doc.tokens,
-          g.keypasses.map(k => graft.convert.SpadlPipeline.Kp(k.event_id, k.pass_type)))).size
-    }.sum
+    val (batchRows, _) = Kit.truth(games.map(_.doc))
     println(s"[stream] final sink_rows=${out.count()} batch_truth_rows=$batchRows")
     println(s"[stream] duplicate keys=${out.count() - out.select("game_id", "action_idx").distinct().count()}")
     println(s"[stream] committed_batches=${sink.committedBatchIds().size} input_rows_seen=${metrics.totalInputRows} state_rows_last=${metrics.totalStateRows} late_rows=${metrics.lateRows} lost_kp_upgrades=${metrics.lostUpgrades}")
@@ -86,22 +66,16 @@ object RunStream {
     spark.stop()
   }
 
+  // GRAFT_STATE=rocksdb selects RocksDB state
+  private def session(): SparkSession =
+    StateStores.applyEnv(Kit.session(8, "graft-runstream"))
+
   private def resumeProbe(root: String): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
+    val spark = session()
     val sink = new ExactlyOnceSink(s"$root/out")
     val before = sink.read(spark).count()
-    val probe = Seq(SpadlStream.StreamEvent("x", "opta", 0, 10, 0,
-      new Timestamp(0), Array(0), None))
-    val stream = spark.readStream
-      .schema(spark.createDataset(probe).schema)
-      .parquet(s"$root/src/*")
-      .as[SpadlStream.StreamEvent]
-    val q = StreamJob.start(spark, stream, s"$root/out", s"$root/ck",
-      trigger = Trigger.AvailableNow())
+    val q = StreamJob.start(spark, Kit.eventStream(spark, s"$root/src", 2),
+      s"$root/out", s"$root/ck", trigger = Trigger.AvailableNow())
     q.awaitTermination(60000); q.stop()
     val after = sink.read(spark).count()
     val dups = sink.read(spark).count() -

@@ -1,70 +1,21 @@
 package graft.tools
 
 import graft.fixtures.FixtureGen
-import graft.streaming.{ExactlyOnceSink, SpadlStream, StreamJob}
+import graft.model.TokenDoc
+import graft.streaming.{ExactlyOnceSink, SpadlStream, StateStores, StreamJob}
+import graft.streaming.SpadlStream.StreamEvent
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
-import java.sql.Timestamp
+import scala.collection.mutable.ArrayBuffer
+import scala.collection.parallel.CollectionConverters._
 
 /** Streaming-job throughput at two parallelism levels: the full CEP
   * pipeline (file-source event rows -> watermark -> stream state ->
   * exactly-once sink) end-to-end, interleaved lo/hi, min over reps.
   * Prints one JSON line. Usage:
-  *   sbt "runMain graft.tools.StreamBench [games] [reps]"
+  *   sbt "runMain graft.tools.StreamBench [games] [reps] [perGame]"
   */
 object StreamBench {
-  private val Base = 1704067200000L
-
-  /** Idle pause between reps (SPARK_GRAFT_REP_COOLDOWN_MS). This sandbox
-    * throttles after minutes of SUSTAINED wide load (short pure-CPU bursts
-    * scale at 0.94-0.97 while rep 3+ of a long bench degrades 2-4x) — a
-    * cooldown lets the host's CPU budget recover so reps measure the
-    * ENGINE, not the budget-exhaustion dynamics. Irrelevant on real
-    * clusters; pure measurement hygiene here.
-    */
-  private def coolDown(): Unit =
-    sys.env.get("SPARK_GRAFT_REP_COOLDOWN_MS").map(_.toLong)
-      .filter(_ > 0).foreach { ms =>
-        println(s"[sbench] cooldown ${ms}ms"); Thread.sleep(ms)
-      }
-
-  /** Host-speed factor right now: the Bench pure-CPU canary vs its
-    * throttle-clean reference. 1.0 = clean host; >1 = the whole JVM is
-    * running that much slower (hypervisor steal).
-    */
-  private def canaryFactor(): Double =
-    graft.Bench.canarySec() / graft.Bench.CanaryRefSec
-
-  /** Canary threshold that classifies a rep as throttle-clean (also the
-    * gate bar when gating is on). */
-  private val canaryThreshold: Double =
-    sys.env.get("SPARK_GRAFT_CANARY_MAX").map(_.toDouble).getOrElse(1.3)
-
-  /** Gate on host speed before a measured rep: when SPARK_GRAFT_CANARY_GATE
-    * is set, wait (idle) until the canary reads <= canaryThreshold or the
-    * wait budget (SPARK_GRAFT_CANARY_BUDGET_MS, default 10 min) runs out,
-    * then proceed regardless — the reading is RECORDED either way, so the
-    * bench JSON itself shows which reps ran on a clean host. Two rounds
-    * running, the driver artifact could not distinguish throttle waves
-    * from engine regressions without a judge re-measurement; per-rep
-    * canary readings close that hole at the artifact level.
-    */
-  private def gateCanary(tag: String): Double = {
-    var f = canaryFactor()
-    if (!sys.env.contains("SPARK_GRAFT_CANARY_GATE")) return f
-    val waitMs =
-      sys.env.get("SPARK_GRAFT_CANARY_WAIT_MS").map(_.toLong).getOrElse(45000L)
-    val deadline = System.nanoTime() +
-      sys.env.get("SPARK_GRAFT_CANARY_BUDGET_MS").map(_.toLong)
-        .getOrElse(600000L) * 1000000L
-    while (f > canaryThreshold && System.nanoTime() < deadline) {
-      println(f"[sbench] host canary $f%.2fx ref > $canaryThreshold%.2f — " +
-        s"idling ${waitMs}ms before $tag")
-      Thread.sleep(waitMs)
-      f = canaryFactor()
-    }
-    f
-  }
 
   /** bench scratch root (corpus, sinks, checkpoints). SPARK_GRAFT_BENCH_ROOT
     * relocates it (e.g. to a tmpfs) together with SPARK_GRAFT_LOCAL_DIR when
@@ -90,36 +41,34 @@ object StreamBench {
     // work at 2 vs 8 partitions over a 2.46M-row join state), so the
     // partition count must be the query's property, not the cluster's.
     val parts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", cores.toString)
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-streambench-$cores")
-      .config("spark.sql.shuffle.partitions", parts)
     // SPARK_GRAFT_LOCAL_DIR relocates executor-local scratch (shuffle
     // files AND the RocksDB working directories) — point it at a tmpfs to
     // model per-executor NVMe when the shared single virtual disk of this
     // sandbox becomes the bottleneck all parallelism levels serialize on
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").foreach { d =>
-      new java.io.File(d).mkdirs(); b.config("spark.local.dir", d)
+    val localDir = sys.env.get("SPARK_GRAFT_LOCAL_DIR").map { d =>
+      new java.io.File(d).mkdirs(); "spark.local.dir" -> d
     }
-    val s = b
-      .config("spark.driver.maxResultSize", "4g")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    extra.foreach { case (k, v) => s.conf.set(k, v) }
+    val conf = Map("spark.sql.shuffle.partitions" -> parts,
+      "spark.driver.maxResultSize" -> "4g") ++ localDir ++ extra
     // GRAFT_STATE=rocksdb runs the whole bench on the RocksDB state-store
     // provider (the off-heap spill path of the design scale)
-    graft.streaming.StateStores.applyEnv(s)
+    StateStores.applyEnv(Kit.session(cores, s"graft-streambench-$cores", conf))
   }
 
-  private def sentinel(i: Int, d: Int) = SpadlStream.StreamEvent(s"99$i",
-    "opta", 0, 10, i, new Timestamp(Base + d * 86400000L),
-    Array(1, 1, 3, 0, 0, 1, 10, 1, 5000, 5000, 0), None)
+  private def stateName: String =
+    if (StateStores.envConfs.isEmpty) "hdfs-heap" else "rocksdb"
+
+  private val filesPerTrigger =
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_MFPT", "4").toInt
+
+  private val timeoutMs =
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_TIMEOUT_MS", "580000").toLong
 
   /** Host CPU count captured BEFORE any pinning (availableProcessors
     * reflects the current affinity mask once taskset has run). */
   private val hostCpus = Runtime.getRuntime.availableProcessors()
+
+  private val cpuset = sys.env.contains("SPARK_GRAFT_CPUSET")
 
   /** OS-enforced core budget for a parallelism level (SPARK_GRAFT_CPUSET):
     * `taskset -a -p -c 0-(n-1)` on this JVM before each measured run, the
@@ -134,7 +83,7 @@ object StreamBench {
     * engine, not local-mode thread accounting.
     */
   private def pinCpus(n: Int): Unit =
-    if (sys.env.contains("SPARK_GRAFT_CPUSET")) {
+    if (cpuset) {
       val pid = ProcessHandle.current().pid().toString
       val rc = new ProcessBuilder(
         "taskset", "-a", "-p", "-c", s"0-${math.min(n, hostCpus) - 1}", pid)
@@ -142,87 +91,104 @@ object StreamBench {
       require(rc == 0, s"taskset pin to $n cpus failed rc=$rc")
     }
 
-  private def unpinCpus(): Unit = pinCpus(hostCpus)
-
-  /** one full run at `cores`; returns (sinkRows, wallSeconds,
-    * sustainedEventRows, sustainedSeconds, busySeconds).
-    *
-    * "sustained" sums numInputRows/durations over DATA batches only
-    * (>= 1000 input rows) — the INGEST-side micro-batch throughput.
-    * `busySeconds` sums batchDuration over ALL batches (ingest + the
-    * state-timeout EMISSION batch + the ~0.3s empty flush batches): a
-    * steady-state 10^12-sequence stream interleaves ingest and emission
-    * every trigger, so events/busySeconds is the full-pipeline sustained
-    * rate — the number a production stream actually runs at.
+  /** Runs `body` pinned to `n` cpus. Any failure inside (session start,
+    * stream timeout require) must not leave the WHOLE JVM pinned to a
+    * reduced cpuset for subsequent code in this process (round-5 ADVICE).
     */
-  private def run(cores: Int, srcDir: String, root: String,
-      tag: String, saltParts: Option[Int] = None,
-      extra: Map[String, String] = Map.empty)
-      : (Long, Double, Long, Double, Double) = {
-    pinCpus(cores)
-    // any failure below (session start, stream timeout require) must not
-    // leave the WHOLE JVM pinned to a reduced cpuset for subsequent code
-    // in this process (round-5 ADVICE)
-    try runPinned(cores, srcDir, root, tag, saltParts, extra)
-    finally unpinCpus()
+  private def pinned[T](n: Int)(body: => T): T = {
+    pinCpus(n)
+    try body finally pinCpus(hostCpus)
   }
 
-  private def runPinned(cores: Int, srcDir: String, root: String,
-      tag: String, saltParts: Option[Int],
-      extra: Map[String, String])
-      : (Long, Double, Long, Double, Double) = {
+  /** A bench source directory and the batch truth of its events. */
+  private final case class Corpus(src: String, events: Long,
+      truthRows: Long, truthDigest: Long)
+
+  private def timeOrdered(events: Seq[StreamEvent]): Vector[StreamEvent] =
+    events.toVector.sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
+
+  /** ONE part-file per call: maxFilesPerTrigger counts part-files, and
+    * many small batches make the bench measure fixed trigger cost only.
+    */
+  private def writeFile(spark: SparkSession, events: Seq[StreamEvent],
+      path: String): Unit = {
+    import spark.implicits._
+    spark.createDataset(events).coalesce(1).write.parquet(path)
+  }
+
+  /** Time-ordered events as `files` part-files, so each trigger advances
+    * the watermark. */
+  private def writeShards(spark: SparkSession, events: Seq[StreamEvent],
+      src: String, files: Int): Unit =
+    events.grouped(math.max(1, events.size / files)).zipWithIndex.foreach {
+      case (c, i) => writeFile(spark, c, f"$src/p$i%03d")
+    }
+
+  /** Writes the closing sentinels, then reads the source once to prime the
+    * page cache: without this the first rep pays the cold disk read of the
+    * fresh parquet (observed 2-4x slower than every later rep) and poisons
+    * the median.
+    */
+  private def closeSource(spark: SparkSession, src: String): Unit = {
+    (1 to 3).foreach(i =>
+      writeFile(spark, Seq(SpadlStream.sentinel(i, 29 + i)), s"$src/zz_s$i"))
+    spark.read.parquet(s"$src/*").foreach(_ => ())
+  }
+
+  private def docs(sizes: Seq[Int]): Vector[TokenDoc] =
+    sizes.indices.par.map(i => FixtureGen.game(i, sizes(i)).doc).toVector
+
+  /** Fixture game i with `sizes(i)` events, streamed as `files` time-ordered
+    * part-files plus the sentinels. */
+  private def corpus(spark: SparkSession, src: String, sizes: Seq[Int],
+      files: Int = 16): Corpus = {
+    val ds = docs(sizes)
+    val events = timeOrdered(ds.par.flatMap(d => SpadlStream.toStreamEvents(d)).seq)
+    writeShards(spark, events, src, files)
+    closeSource(spark, src)
+    val (rows, digest) = Kit.truth(ds)
+    Corpus(src, events.size.toLong, rows, digest)
+  }
+
+  /** Untimed JIT warm-up on a small one-file corpus at each core count,
+    * after stopping the `prep` session: the first run through the pipeline
+    * pays Janino codegen + C2 compilation of the state loop (observed 3x on
+    * the first lo run), which would poison rep 1.
+    */
+  private def warmUp(prep: SparkSession, root: String, cores: Seq[Int],
+      tag: String): Unit = {
+    val wu = corpus(prep, s"$root/wusrc", Seq.fill(256)(200), files = 1)
+    prep.stop()
+    cores.foreach { n =>
+      val rows = run(n, wu.src, root, s"wu$n").rows
+      require(rows == wu.truthRows, s"warm-up rows $rows != truth ${wu.truthRows}")
+    }
+    println(s"[$tag] warmup done")
+  }
+
+  /** One stream run. `dataRows`/`dataSec` sum numInputRows/durations over
+    * DATA batches only (>= 1000 input rows) — the INGEST-side micro-batch
+    * throughput. `busySec` sums batchDuration over ALL batches (ingest +
+    * the state-timeout EMISSION batch + the ~0.3s empty flush batches): a
+    * steady-state 10^12-sequence stream interleaves ingest and emission
+    * every trigger, so events/busySec is the full-pipeline sustained
+    * rate — the number a production stream actually runs at.
+    */
+  private final case class RunResult(rows: Long, wallSec: Double,
+      dataRows: Long, dataSec: Double, busySec: Double)
+
+  private def run(cores: Int, src: String, root: String, tag: String,
+      saltParts: Option[Int] = None, extra: Map[String, String] = Map.empty,
+      maxFiles: Int = filesPerTrigger): RunResult = pinned(cores) {
     val spark = session(cores, extra)
     val outDir = s"$root/out_$tag"
-    val ck = s"$root/ck_$tag"
-    import spark.implicits._
-    var susRows = 0L
-    var susMs = 0L
-    var allMs = 0L
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        allMs += e.progress.batchDuration
-        if (e.progress.numInputRows >= 1000) {
-          susRows += e.progress.numInputRows
-          susMs += e.progress.batchDuration
-        }
-        if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-          println(s"[sbench-progress] ${e.progress.json}")
-      }
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    }
-    spark.streams.addListener(listener)
-    if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG")) {
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-            val m = sc.stageInfo.taskMetrics
-            println(f"[sbench-stage $tag] id=${sc.stageInfo.stageId} " +
-              f"tasks=${sc.stageInfo.numTasks} name=${sc.stageInfo.name.take(40)} " +
-              f"run=${m.executorRunTime / 1000.0}%.1fs gc=${m.jvmGCTime / 1000.0}%.1fs " +
-              f"cpu=${m.executorCpuTime / 1e9}%.1fs " +
-              f"shufW=${m.shuffleWriteMetrics.writeTime / 1e9}%.1fs " +
-              f"shufFetch=${m.shuffleReadMetrics.fetchWaitTime / 1000.0}%.1fs " +
-              f"serialize=${m.resultSerializationTime / 1000.0}%.1fs " +
-              f"deserialize=${m.executorDeserializeTime / 1000.0}%.1fs")
-          }
-        })
-    }
-    val probe = Seq(sentinel(0, 0))
-    val stream = spark.readStream
-      .schema(spark.createDataset(probe).schema)
-      .option("maxFilesPerTrigger", sys.env.getOrElse("SPARK_GRAFT_STREAM_MFPT", "4"))
-      .parquet(s"$srcDir/*")
-      .as[SpadlStream.StreamEvent]
+    val totals = new Kit.ProgressTotals
+    spark.streams.addListener(totals)
     val t0 = System.nanoTime()
-    val q = StreamJob.start(spark, stream, outDir, ck,
-      trigger = Trigger.AvailableNow(), saltParts = saltParts)
-    val finished = q.awaitTermination(
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_TIMEOUT_MS", "580000").toLong)
+    val q = StreamJob.start(spark, Kit.eventStream(spark, src, maxFiles),
+      outDir, s"$root/ck_$tag", trigger = Trigger.AvailableNow(),
+      saltParts = saltParts)
+    val finished = q.awaitTermination(timeoutMs)
     q.stop()
     // a timed-out run has an empty/partial sink; fail HERE with the real
     // cause instead of a confusing rows-mismatch later
@@ -231,22 +197,19 @@ object StreamBench {
     val sec = (System.nanoTime() - t0) / 1e9
     val rows = new ExactlyOnceSink(outDir).read(spark).count()
     spark.stop()
-    (rows, sec, susRows, susMs / 1000.0, allMs / 1000.0)
+    RunResult(rows, sec, totals.dataRows, totals.dataMs / 1000.0,
+      totals.busyMs / 1000.0)
   }
 
-  private def digestOf(hs: Seq[Long]): Long =
-    hs.sorted.foldLeft(17L)((a, b) => a * 31L + b)
-
-  /** order-independent full-content digest of a sink directory. */
-  private def sinkDigest(root: String, tag: String): (Long, Long) = {
+  /** Full-content digest of run `tag`'s sink, checked against the batch
+    * truth: identical exactly-once output across parallelism levels,
+    * configs and crashes AND vs batch (north rule). */
+  private def checkDigest(root: String, tag: String, c: Corpus): Unit = {
     val sp = session(4)
-    import sp.implicits._
-    val ds = new ExactlyOnceSink(s"$root/out_$tag").read(sp)
-      .drop("_lineage_partition", "_batch_id")
-      .as[graft.model.ValuedAction].map(_.hashCode.toLong)
-      .collect().toSeq
-    sp.stop()
-    (ds.size.toLong, digestOf(ds))
+    val (n, digest) = try Kit.sinkDigest(sp, s"$root/out_$tag") finally sp.stop()
+    require(n == c.truthRows && digest == c.truthDigest,
+      s"$tag sink content digest $digest ($n rows) != batch truth " +
+        s"${c.truthDigest} (${c.truthRows} rows)")
   }
 
   /** Skew-bar measurement (BASELINE.md "no hot-partition collapse on
@@ -264,114 +227,60 @@ object StreamBench {
     *                   unsplittable hot Kafka-style partition);
     *   skew_hot_salt — same + `StreamJob.saltedSpread` on the stateless
     *                   stage.
-    * Every run must produce the skew corpus's batch-truth digest (the
-    * salt cannot change output — north rule); ratios vs uniform are the
-    * reported skew bar. Usage:
-    *   SPARK_GRAFT_STREAM_MFPT=100 sbt "runMain graft.tools.StreamBench skew [games] [reps] [perGame]"
+    * Every run takes the whole corpus in one trigger: the hot shard spans
+    * the whole match, so any later trigger's cold events would sit below
+    * the watermark it set and be dropped as late. Every run must produce
+    * the skew corpus's batch-truth digest (the salt cannot change output —
+    * north rule); ratios vs uniform are the reported skew bar. Usage:
+    *   sbt "runMain graft.tools.StreamBench skew [games] [reps] [perGame]"
     */
   private def skewMain(args: Array[String]): Unit = {
     val games = if (args.length > 0) args(0).toInt else 3072
     val reps = if (args.length > 1) args(1).toInt else 3
     val perGame = if (args.length > 2) args(2).toInt else 800
     val hotGames = 8 // 10x-sized keys
-    def sizeOf(i: Int): Int = if (i < hotGames) perGame * 10 else perGame
+    val sizes = (0 until games).map(i => if (i < hotGames) perGame * 10 else perGame)
     val root = benchRoot("graft_skew")
-    val uniSrc = s"$root/src_uniform"
-    val skewSrc = s"$root/src_skew"
 
     val prep = session(8)
-    import prep.implicits._
-    import scala.collection.parallel.CollectionConverters._
-
-    // uniform corpus: same layout as the main bench (16 even time-ordered
-    // shards)
-    val uni = (0 until games).par
-      .flatMap(i => SpadlStream.toStreamEvents(FixtureGen.game(i, perGame).doc, Base))
-      .toVector.sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-    uni.grouped(math.max(1, uni.size / 16)).zipWithIndex.foreach { case (c, i) =>
-      prep.createDataset(c).coalesce(1).write.parquet(f"$uniSrc/p$i%03d")
-    }
+    // uniform corpus: same layout as the main bench
+    val uni = corpus(prep, s"$root/src_uniform", Seq.fill(games)(perGame))
     // skew corpus: hot games 10x; hot shard = first games until 80% of
     // events, written as ONE parquet part-file
-    val byGame = (0 until games).par.map { i =>
-      i -> SpadlStream.toStreamEvents(FixtureGen.game(i, sizeOf(i)).doc, Base)
-    }.toVector.sortBy(_._1)
-    val skewTotal = byGame.iterator.map(_._2.size.toLong).sum
-    var cum = 0L
-    val hotSet = scala.collection.mutable.Set.empty[Int]
-    byGame.foreach { case (i, ev) =>
-      if (cum < skewTotal * 8 / 10) { hotSet += i; cum += ev.size }
-    }
-    val hotEv = byGame.filter(g => hotSet(g._1)).flatMap(_._2)
-      .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-    val coldEv = byGame.filterNot(g => hotSet(g._1)).flatMap(_._2)
-      .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-    prep.createDataset(hotEv).coalesce(1).write.parquet(s"$skewSrc/hot")
-    coldEv.grouped(math.max(1, coldEv.size / 15)).zipWithIndex.foreach {
-      case (c, i) => prep.createDataset(c).coalesce(1)
-        .write.parquet(f"$skewSrc/p$i%03d")
-    }
-    (1 to 3).foreach { i =>
-      prep.createDataset(Seq(sentinel(i, 29 + i))).write.parquet(s"$uniSrc/zz_s$i")
-      prep.createDataset(Seq(sentinel(i, 29 + i))).write.parquet(s"$skewSrc/zz_s$i")
-    }
-    def truth(size: Int => Int): (Long, Long) = {
-      val actions = (0 until games).par.flatMap { i =>
-        val g = FixtureGen.game(i, size(i))
-        graft.vaep.ValuationCore.value(
-          graft.convert.SpadlPipeline.convertDoc(g.doc.doc_id, g.doc.tokens, Nil))
-      }.toVector
-      (actions.size.toLong, digestOf(actions.map(_.hashCode.toLong)))
-    }
-    val (uniRows, uniDig) = truth(_ => perGame)
-    val (skewRows, skewDig) = truth(sizeOf)
-    val hotFileBytes = {
-      val d = new java.io.File(s"$skewSrc/hot")
-      d.listFiles().filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    }
-    println(s"[skew] uniform events=${uni.size} truth_rows=$uniRows | " +
+    val skewSrc = s"$root/src_skew"
+    val skewDocs = docs(sizes)
+    val byGame = skewDocs.par.map(d => SpadlStream.toStreamEvents(d)).seq
+    val skewTotal = byGame.iterator.map(_.size.toLong).sum
+    val nHot = byGame.scanLeft(0L)(_ + _.size).indexWhere(_ >= skewTotal * 8 / 10)
+    val hotEv = timeOrdered(byGame.take(nHot).flatten)
+    writeFile(prep, hotEv, s"$skewSrc/hot")
+    writeShards(prep, timeOrdered(byGame.drop(nHot).flatten), skewSrc, 15)
+    closeSource(prep, skewSrc)
+    val (skewRows, skewDig) = Kit.truth(skewDocs)
+    val skew = Corpus(skewSrc, skewTotal, skewRows, skewDig)
+    val hotFileBytes = new java.io.File(s"$skewSrc/hot").listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.length).sum
+    println(s"[skew] uniform events=${uni.events} truth_rows=${uni.truthRows} | " +
       s"skew events=$skewTotal hot_shard=${hotEv.size} (${hotEv.size * 100 / skewTotal}%) " +
       s"hot_file=${hotFileBytes / 1024 / 1024}MB truth_rows=$skewRows")
-    // page-cache priming + JIT warmup (same rationale as the main bench)
-    prep.read.parquet(s"$uniSrc/*").foreach(_ => ())
-    prep.read.parquet(s"$skewSrc/*").foreach(_ => ())
-    prep.stop()
-    locally {
-      val wuDir = s"$root/wusrc"
-      val wu = session(8)
-      import wu.implicits._
-      val wuEvents = (0 until 256)
-        .flatMap(i => SpadlStream.toStreamEvents(FixtureGen.game(i, 200).doc, Base))
-        .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-      wu.createDataset(wuEvents).coalesce(1).write.parquet(s"$wuDir/p000")
-      (1 to 3).foreach(i => wu.createDataset(Seq(sentinel(i, 29 + i)))
-        .write.parquet(s"$wuDir/zz_s$i"))
-      wu.stop()
-      run(8, wuDir, root, "wu")
-      println("[skew] warmup done")
-    }
+    warmUp(prep, root, Seq(8), "skew")
 
     // splittable scan: cap scan partitions well under the hot shard size so
     // the parquet reader re-splits it (the Iceberg/parquet design target);
     // unsplittable: one 2g bound forces the hot shard into a single task
     val split = Map("spark.sql.files.maxPartitionBytes" -> "16m")
     val oneTask = Map("spark.sql.files.maxPartitionBytes" -> "2g")
-    final case class Cfg(tag: String, src: String, salt: Option[Int],
-        extra: Map[String, String], events: Long, truthRows: Long,
-        truthDig: Long)
+    final case class Cfg(tag: String, corpus: Corpus, salt: Option[Int],
+        extra: Map[String, String])
     val cfgs = Seq(
-      Cfg("uniform", uniSrc, None, oneTask, uni.size.toLong, uniRows, uniDig),
-      Cfg("skew_split", skewSrc, None, split, skewTotal, skewRows, skewDig),
-      Cfg("skew_hot", skewSrc, None, oneTask, skewTotal, skewRows, skewDig),
-      Cfg("skew_hot_salt", skewSrc, Some(8), oneTask, skewTotal, skewRows,
-        skewDig))
-    val evps = cfgs.map(_.tag -> scala.collection.mutable.ArrayBuffer
-      .empty[Double]).toMap
-    val canBefore = scala.collection.mutable.ArrayBuffer[Double]()
-    val canAfter = scala.collection.mutable.ArrayBuffer[Double]()
+      Cfg("uniform", uni, None, oneTask),
+      Cfg("skew_split", skew, None, split),
+      Cfg("skew_hot", skew, None, oneTask),
+      Cfg("skew_hot_salt", skew, Some(8), oneTask))
+    val evps = cfgs.map(_.tag -> ArrayBuffer.empty[Double]).toMap
+    val canaries = new Kit.CanaryLog
     (1 to reps).foreach { r =>
-      if (r > 1) coolDown()
-      canBefore += gateCanary(s"skew rep$r")
+      canaries.enter()
       // rotate which config runs first so a monotone host-throttle drift
       // within a rep can't systematically penalize the later configs
       // (the lo/hi scaling bench alternates order for the same reason)
@@ -379,41 +288,34 @@ object StreamBench {
         cfgs.take((r - 1) % cfgs.size)
       rotated.foreach { c =>
         val tag = s"${c.tag}_r$r"
-        val (rows, wall, _, _, busy) = run(8, c.src, root, tag, c.salt, c.extra)
-        require(rows == c.truthRows,
-          s"$tag rows $rows != batch truth ${c.truthRows}")
+        val res = run(8, c.corpus.src, root, tag, c.salt, c.extra,
+          maxFiles = Int.MaxValue)
+        require(res.rows == c.corpus.truthRows,
+          s"$tag rows ${res.rows} != batch truth ${c.corpus.truthRows}")
         if (r == 1) {
-          val (n, dig) = sinkDigest(root, tag)
-          require(n == c.truthRows && dig == c.truthDig,
-            s"$tag content digest $dig != batch truth ${c.truthDig}")
+          checkDigest(root, tag, c.corpus)
           println(s"[skew] $tag content digest OK")
         }
-        evps(c.tag) += c.events / busy
-        println(f"[skew rep $r] ${c.tag}%-14s full-pipeline ${c.events / busy}%.0f ev/s (busy $busy%.1f s, wall $wall%.1f s)")
+        val ev = c.corpus.events / res.busySec
+        evps(c.tag) += ev
+        println(f"[skew rep $r] ${c.tag}%-14s full-pipeline $ev%.0f ev/s (busy ${res.busySec}%.1f s, wall ${res.wallSec}%.1f s)")
       }
-      canAfter += canaryFactor()
-      println(f"[skew rep $r] canary ${canBefore.last}%.2f -> ${canAfter.last}%.2f")
+      canaries.leave()
+      println(f"[skew rep $r] canary ${canaries.before.last}%.2f -> ${canaries.after.last}%.2f")
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val med = cfgs.map(c => c.tag -> median(evps(c.tag).toSeq)).toMap
+    val med = cfgs.map(c => c.tag -> Kit.median(evps(c.tag).toSeq)).toMap
     // throttle-clean subset (canary clean entering AND leaving the rep);
     // within-rep ratios vs that rep's own uniform are drift-robust, so the
     // clean-rep ratio is the median of per-rep ratios over clean reps
-    val clean = (0 until reps).filter(i =>
-      canBefore(i) <= canaryThreshold && canAfter(i) <= canaryThreshold)
+    val clean = canaries.clean
     // with NO clean rep the clean_* fields are honest JSON nulls, not a
     // silent alias of the throttled-rep medians (round-5 ADVICE)
     def ratioMed(tag: String): String =
       if (clean.isEmpty) "null"
-      else f"${median(clean.map(i => evps(tag)(i) / evps("uniform")(i)))}%.3f"
-    val stateName =
-      if (sys.env.get("GRAFT_STATE").contains("rocksdb")) "rocksdb" else "hdfs-heap"
+      else f"${Kit.median(clean.map(i => evps(tag)(i) / evps("uniform")(i)))}%.3f"
     val perRep = cfgs.map(c => s""""${c.tag}":[${evps(c.tag)
       .map(v => f"$v%.0f").mkString(",")}]""").mkString(",")
-    println(f"""{"stream_skew_bench":{"state_store":"$stateName","cpuset":${sys.env.contains("SPARK_GRAFT_CPUSET")},"games":$games,"hot_games":$hotGames,"per_game":$perGame,"uniform_events":${uni.size},"skew_events":$skewTotal,"hot_shard_pct":${hotEv.size * 100 / skewTotal},"hot_file_mb":${hotFileBytes / 1024 / 1024},"reps":$reps,"uniform_evps":${med("uniform")}%.0f,"skew_splittable_evps":${med("skew_split")}%.0f,"skew_hotshard_evps":${med("skew_hot")}%.0f,"skew_hotshard_salted_evps":${med("skew_hot_salt")}%.0f,"skew_splittable_ratio":${med("skew_split") / med("uniform")}%.3f,"skew_hotshard_ratio":${med("skew_hot") / med("uniform")}%.3f,"skew_hotshard_salted_ratio":${med("skew_hot_salt") / med("uniform")}%.3f,"per_rep_evps":{$perRep},"canary_ref_sec":${graft.Bench.CanaryRefSec}%.3f,"canary_threshold":$canaryThreshold%.2f,"canary_before":[${canBefore.map(c => f"$c%.2f").mkString(",")}],"canary_after":[${canAfter.map(c => f"$c%.2f").mkString(",")}],"clean_reps":${clean.size},"clean_splittable_ratio":${ratioMed("skew_split")},"clean_hotshard_ratio":${ratioMed("skew_hot")},"clean_hotshard_salted_ratio":${ratioMed("skew_hot_salt")},"digests_equal":true}}""")
+    println(f"""{"stream_skew_bench":{"state_store":"$stateName","cpuset":$cpuset,"games":$games,"hot_games":$hotGames,"per_game":$perGame,"uniform_events":${uni.events},"skew_events":$skewTotal,"hot_shard_pct":${hotEv.size * 100 / skewTotal},"hot_file_mb":${hotFileBytes / 1024 / 1024},"reps":$reps,"uniform_evps":${med("uniform")}%.0f,"skew_splittable_evps":${med("skew_split")}%.0f,"skew_hotshard_evps":${med("skew_hot")}%.0f,"skew_hotshard_salted_evps":${med("skew_hot_salt")}%.0f,"skew_splittable_ratio":${med("skew_split") / med("uniform")}%.3f,"skew_hotshard_ratio":${med("skew_hot") / med("uniform")}%.3f,"skew_hotshard_salted_ratio":${med("skew_hot_salt") / med("uniform")}%.3f,"per_rep_evps":{$perRep},"canary_ref_sec":${graft.Bench.CanaryRefSec}%.3f,"canary_threshold":${Kit.CleanCanary}%.2f,"canary_before":${canaries.list(canaries.before)},"canary_after":${canaries.list(canaries.after)},"clean_reps":${clean.size},"clean_splittable_ratio":${ratioMed("skew_split")},"clean_hotshard_ratio":${ratioMed("skew_hot")},"clean_hotshard_salted_ratio":${ratioMed("skew_hot_salt")},"digests_equal":true}}""")
   }
 
   /** Timed crash-recovery benchmark (the north rule's resumability row,
@@ -440,333 +342,164 @@ object StreamBench {
     val perGame = if (args.length > 2) args(2).toInt else 800
     val crashAfter = sys.env.getOrElse("SPARK_GRAFT_CRASH_AFTER", "2").toInt
     val root = benchRoot("graft_recovery")
-    val srcDir = s"$root/src"
 
     val prep = session(8)
-    import prep.implicits._
-    import scala.collection.parallel.CollectionConverters._
-    val all = (0 until games).par
-      .flatMap(i => SpadlStream.toStreamEvents(FixtureGen.game(i, perGame).doc, Base))
-      .toVector.sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-    val truthActions = (0 until games).par.flatMap { i =>
-      val g = FixtureGen.game(i, perGame)
-      graft.vaep.ValuationCore.value(
-        graft.convert.SpadlPipeline.convertDoc(g.doc.doc_id, g.doc.tokens, Nil))
-    }.toVector
-    val truthRows = truthActions.size.toLong
-    val truthDigest = digestOf(truthActions.map(_.hashCode.toLong))
-    val nFiles = 16
-    all.grouped(math.max(1, all.size / nFiles)).zipWithIndex.foreach {
-      case (c, i) => prep.createDataset(c).coalesce(1)
-        .write.parquet(f"$srcDir/p$i%03d")
-    }
-    (1 to 3).foreach(i => prep.createDataset(Seq(sentinel(i, 29 + i)))
-      .write.parquet(s"$srcDir/zz_s$i"))
-    prep.read.parquet(s"$srcDir/*").foreach(_ => ())
-    prep.stop()
-    println(s"[recovery] events=${all.size} truth_rows=$truthRows")
-    // JIT warmup (same rationale as the main bench)
-    locally {
-      val wuDir = s"$root/wusrc"
-      val wu = session(8)
-      import wu.implicits._
-      val wuEvents = (0 until 256)
-        .flatMap(i => SpadlStream.toStreamEvents(FixtureGen.game(i, 200).doc, Base))
-        .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-      wu.createDataset(wuEvents).coalesce(1).write.parquet(s"$wuDir/p000")
-      (1 to 3).foreach(i => wu.createDataset(Seq(sentinel(i, 29 + i)))
-        .write.parquet(s"$wuDir/zz_s$i"))
-      wu.stop()
-      run(8, wuDir, root, "wu")
-      println("[recovery] warmup done")
-    }
+    val c = corpus(prep, s"$root/src", Seq.fill(games)(perGame))
+    println(s"[recovery] events=${c.events} truth_rows=${c.truthRows}")
+    warmUp(prep, root, Seq(8), "recovery")
 
-    def streamOf(spark: SparkSession) = {
-      import spark.implicits._
-      spark.readStream
-        .schema(spark.createDataset(Seq(sentinel(0, 0))).schema)
-        .option("maxFilesPerTrigger",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_MFPT", "4"))
-        .parquet(s"$srcDir/*")
-        .as[SpadlStream.StreamEvent]
-    }
-    val ctlWall = scala.collection.mutable.ArrayBuffer[Double]()
-    val crashWall = scala.collection.mutable.ArrayBuffer[Double]()
-    val recWall = scala.collection.mutable.ArrayBuffer[Double]()
-    val rtoSec = scala.collection.mutable.ArrayBuffer[Double]()
-    val rowsAtCrash = scala.collection.mutable.ArrayBuffer[Long]()
-    val canBefore = scala.collection.mutable.ArrayBuffer[Double]()
-    val canAfter = scala.collection.mutable.ArrayBuffer[Double]()
+    val ctlWall = ArrayBuffer[Double]()
+    val crashWall = ArrayBuffer[Double]()
+    val recWall = ArrayBuffer[Double]()
+    val rtoSec = ArrayBuffer[Double]()
+    val rowsAtCrash = ArrayBuffer[Long]()
+    val canaries = new Kit.CanaryLog
     (1 to reps).foreach { r =>
-      if (r > 1) coolDown()
-      canBefore += gateCanary(s"recovery rep$r")
+      canaries.enter()
       // control: uninterrupted
-      val (cr, cw, _, _, _) = run(8, srcDir, root, s"ctl$r")
-      require(cr == truthRows, s"control rows $cr != truth $truthRows")
-      ctlWall += cw
-      // crash phase: stop after `crashAfter` committed data batches
-      pinCpus(8)
+      val ctl = run(8, c.src, root, s"ctl$r")
+      require(ctl.rows == c.truthRows, s"control rows ${ctl.rows} != truth ${c.truthRows}")
+      ctlWall += ctl.wallSec
       val outRec = s"$root/out_rec$r"
       val ckRec = s"$root/ck_rec$r"
-      val s1 = session(8)
-      val crashed = new java.util.concurrent.CountDownLatch(1)
-      val dataBatchCount = new java.util.concurrent.atomic.AtomicInteger(0)
-      s1.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(e: org.apache.spark.sql.streaming
-              .StreamingQueryListener.QueryProgressEvent): Unit = {
-            if (e.progress.numInputRows >= 1000) dataBatchCount.incrementAndGet()
-            if (dataBatchCount.get() >= crashAfter) crashed.countDown()
-          }
-          // also release the latch if the AvailableNow run TERMINATES with
-          // fewer than crashAfter data batches (small corpus / large MFPT)
-          // instead of hanging the bench forever; the require below then
-          // fails with the real cause (round-5 ADVICE)
-          override def onQueryTerminated(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryTerminatedEvent): Unit =
-            crashed.countDown()
-        })
-      val t1 = System.nanoTime()
-      val q1 = StreamJob.start(s1, streamOf(s1), outRec, ckRec,
-        trigger = Trigger.AvailableNow())
-      crashed.await()
-      require(dataBatchCount.get() >= crashAfter,
-        s"recovery bench: stream terminated after ${dataBatchCount.get()} " +
-          s"data batches, before the crash point ($crashAfter) — shrink " +
-          "SPARK_GRAFT_CRASH_AFTER or the per-trigger file count")
-      q1.stop() // driver loss between triggers; uncommitted work is gone
-      crashWall += (System.nanoTime() - t1) / 1e9
-      rowsAtCrash += new ExactlyOnceSink(outRec).read(s1).count()
-      s1.stop()
-      // recovery: a NEW driver resumes from the checkpoint
-      val s2 = session(8)
-      @volatile var firstCommitNs = 0L
-      s2.streams.addListener(
-        new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryStartedEvent): Unit = ()
-          override def onQueryProgress(e: org.apache.spark.sql.streaming
-              .StreamingQueryListener.QueryProgressEvent): Unit =
-            if (firstCommitNs == 0L) firstCommitNs = System.nanoTime()
-          override def onQueryTerminated(e: org.apache.spark.sql.streaming
-            .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        })
-      val t2 = System.nanoTime()
-      val q2 = StreamJob.start(s2, streamOf(s2), outRec, ckRec,
-        trigger = Trigger.AvailableNow())
-      val finished = q2.awaitTermination(
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_TIMEOUT_MS", "580000").toLong)
-      q2.stop()
-      require(finished, s"recovery rep $r did not finish within the timeout")
-      recWall += (System.nanoTime() - t2) / 1e9
-      rtoSec += (if (firstCommitNs == 0L) Double.NaN
-        else (firstCommitNs - t2) / 1e9)
-      val rows = new ExactlyOnceSink(outRec).read(s2).count()
-      require(rows == truthRows,
-        s"recovered rows $rows != truth $truthRows")
-      s2.stop()
-      unpinCpus()
+      pinned(8) {
+        // crash phase: stop after `crashAfter` committed data batches
+        val s1 = session(8)
+        val crashTotals = new Kit.ProgressTotals
+        s1.streams.addListener(crashTotals)
+        val t1 = System.nanoTime()
+        val q1 = StreamJob.start(s1, Kit.eventStream(s1, c.src, filesPerTrigger),
+          outRec, ckRec, trigger = Trigger.AvailableNow())
+        val reached = crashTotals.awaitDataBatches(crashAfter)
+        require(reached >= crashAfter,
+          s"recovery bench: stream terminated after $reached " +
+            s"data batches, before the crash point ($crashAfter) — shrink " +
+            "SPARK_GRAFT_CRASH_AFTER or the per-trigger file count")
+        q1.stop() // driver loss between triggers; uncommitted work is gone
+        crashWall += (System.nanoTime() - t1) / 1e9
+        rowsAtCrash += new ExactlyOnceSink(outRec).read(s1).count()
+        s1.stop()
+        // recovery: a NEW driver resumes from the checkpoint
+        val s2 = session(8)
+        val recTotals = new Kit.ProgressTotals
+        s2.streams.addListener(recTotals)
+        val t2 = System.nanoTime()
+        val q2 = StreamJob.start(s2, Kit.eventStream(s2, c.src, filesPerTrigger),
+          outRec, ckRec, trigger = Trigger.AvailableNow())
+        val finished = q2.awaitTermination(timeoutMs)
+        q2.stop()
+        require(finished, s"recovery rep $r did not finish within the timeout")
+        recWall += (System.nanoTime() - t2) / 1e9
+        rtoSec += (if (recTotals.firstCommitNs == 0L) Double.NaN
+          else (recTotals.firstCommitNs - t2) / 1e9)
+        val rows = new ExactlyOnceSink(outRec).read(s2).count()
+        require(rows == c.truthRows, s"recovered rows $rows != truth ${c.truthRows}")
+        s2.stop()
+      }
       if (r == 1) {
-        val (n, dig) = sinkDigest(root, "rec1")
-        require(n == truthRows && dig == truthDigest,
-          s"recovered content digest $dig != batch truth $truthDigest")
+        checkDigest(root, "rec1", c)
         println("[recovery] crashed+recovered content digest == batch truth")
       }
-      canAfter += canaryFactor()
+      canaries.leave()
       println(f"[recovery rep $r] control=${ctlWall.last}%.1f s | " +
         f"crash@${rowsAtCrash.last} rows after ${crashWall.last}%.1f s | " +
         f"recover=${recWall.last}%.1f s (RTO first-commit ${rtoSec.last}%.1f s) | " +
         f"overhead=${crashWall.last + recWall.last - ctlWall.last}%.1f s | " +
-        f"canary ${canBefore.last}%.2f -> ${canAfter.last}%.2f")
+        f"canary ${canaries.before.last}%.2f -> ${canaries.after.last}%.2f")
     }
-    def med(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val stateName =
-      if (sys.env.get("GRAFT_STATE").contains("rocksdb")) "rocksdb"
-      else "hdfs-heap"
-    println(f"""{"stream_recovery_bench":{"state_store":"$stateName","cpuset":${sys.env.contains("SPARK_GRAFT_CPUSET")},"games":$games,"event_rows":${all.size},"action_rows":$truthRows,"crash_after_batches":$crashAfter,"reps":$reps,"control_wall_sec":${med(ctlWall.toSeq)}%.1f,"crash_wall_sec":${med(crashWall.toSeq)}%.1f,"recovery_wall_sec":${med(recWall.toSeq)}%.1f,"rto_first_commit_sec":${med(rtoSec.toSeq)}%.1f,"recovery_overhead_sec":${med(crashWall.lazyZip(recWall).lazyZip(ctlWall).map(_ + _ - _).toSeq)}%.1f,"rows_at_crash":[${rowsAtCrash.mkString(",")}],"canary_ref_sec":${graft.Bench.CanaryRefSec}%.3f,"canary_before":[${canBefore.map(c => f"$c%.2f").mkString(",")}],"canary_after":[${canAfter.map(c => f"$c%.2f").mkString(",")}],"digests_equal":true}}""")
+    println(f"""{"stream_recovery_bench":{"state_store":"$stateName","cpuset":$cpuset,"games":$games,"event_rows":${c.events},"action_rows":${c.truthRows},"crash_after_batches":$crashAfter,"reps":$reps,"control_wall_sec":${Kit.median(ctlWall.toSeq)}%.1f,"crash_wall_sec":${Kit.median(crashWall.toSeq)}%.1f,"recovery_wall_sec":${Kit.median(recWall.toSeq)}%.1f,"rto_first_commit_sec":${Kit.median(rtoSec.toSeq)}%.1f,"recovery_overhead_sec":${Kit.median(crashWall.lazyZip(recWall).lazyZip(ctlWall).map(_ + _ - _).toSeq)}%.1f,"rows_at_crash":[${rowsAtCrash.mkString(",")}],"canary_ref_sec":${graft.Bench.CanaryRefSec}%.3f,"canary_before":${canaries.list(canaries.before)},"canary_after":${canaries.list(canaries.after)},"digests_equal":true}}""")
   }
 
-  def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("skew")) { skewMain(args.drop(1)); return }
-    if (args.headOption.contains("recovery")) { recoveryMain(args.drop(1)); return }
+  def main(args: Array[String]): Unit = args.headOption match {
+    case Some("skew") => skewMain(args.drop(1))
+    case Some("recovery") => recoveryMain(args.drop(1))
+    case _ => scalingMain(args)
+  }
+
+  private def scalingMain(args: Array[String]): Unit = {
     val games = if (args.length > 0) args(0).toInt else 1024
     val reps = if (args.length > 1) args(1).toInt else 2
     val perGame = if (args.length > 2) args(2).toInt else 400
     val root = benchRoot("graft_sbench")
-    val srcDir = s"$root/src"
 
     val prep = session(8)
-    import prep.implicits._
-    import scala.collection.parallel.CollectionConverters._
-    val all = (0 until games).par
-      .flatMap(i => SpadlStream.toStreamEvents(FixtureGen.game(i, perGame).doc, Base))
-      .toVector
-      .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-    val nEvents = all.size
-    val truthActions = (0 until games).par.flatMap { i =>
-      val g = FixtureGen.game(i, perGame)
-      graft.vaep.ValuationCore.value(
-        graft.convert.SpadlPipeline.convertDoc(g.doc.doc_id, g.doc.tokens,
-          Nil))
-    }.toVector
-    val truthRows = truthActions.size
+    val c = corpus(prep, s"$root/src", Seq.fill(games)(perGame))
     // content digest over EVERY field of every row (order-independent)
-    val truthDigest = digestOf(truthActions.map(_.hashCode.toLong))
-    println(s"[sbench] batch truth action rows = $truthRows digest=$truthDigest")
-    // time-ordered files so each trigger advances the watermark
-    val nFiles = 16
-    val chunk = math.max(1, nEvents / nFiles)
-    // ONE part-file per chunk: maxFilesPerTrigger counts part-files, and
-    // many small batches make the bench measure fixed trigger cost only
-    all.grouped(chunk).zipWithIndex.foreach { case (c, i) =>
-      prep.createDataset(c).coalesce(1)
-        .write.parquet(f"$srcDir/p$i%03d")
-    }
-    (1 to 3).foreach(i => prep.createDataset(Seq(sentinel(i, 29 + i)))
-      .write.parquet(s"$srcDir/zz_s$i"))
-    prep.stop()
-
-    // untimed JIT warmup on a small corpus: the first run through the
-    // pipeline pays Janino codegen + C2 compilation of the state loop
-    // (observed 3x on the first lo run), which would poison rep 1
-    locally {
-      val wuDir = s"$root/wusrc"
-      val wu = session(8)
-      import wu.implicits._
-      val wuEvents = (0 until 256)
-        .flatMap(i => SpadlStream.toStreamEvents(FixtureGen.game(i, 200).doc, Base))
-        .sortBy(e => (e.event_time.getTime, e.doc_id, e.seq))
-      wu.createDataset(wuEvents).coalesce(1).write.parquet(s"$wuDir/p000")
-      (1 to 3).foreach(i => wu.createDataset(Seq(sentinel(i, 29 + i)))
-        .write.parquet(s"$wuDir/zz_s$i"))
-      // prime the page cache for the BIG corpus: without this the first lo
-      // rep pays the cold disk read of the fresh parquet (observed 2-4x
-      // slower than every later rep) and poisons the median
-      wu.read.parquet(s"$srcDir/*").foreach(_ => ())
-      wu.stop()
-      run(2, wuDir, root, "wu_lo")
-      run(8, wuDir, root, "wu_hi")
-      println("[sbench] warmup done")
-    }
+    println(s"[sbench] batch truth action rows = ${c.truthRows} digest=${c.truthDigest}")
+    warmUp(prep, root, Seq(2, 8), "sbench")
 
     var secLo = Double.MaxValue
     var secHi = Double.MaxValue
     var susLo = 0.0
     var susHi = 0.0
     var rows = 0L
-    val susLoR = scala.collection.mutable.ArrayBuffer[Double]()
-    val susHiR = scala.collection.mutable.ArrayBuffer[Double]()
-    val effR = scala.collection.mutable.ArrayBuffer[Double]()
-    val fullLoR = scala.collection.mutable.ArrayBuffer[Double]()
-    val fullHiR = scala.collection.mutable.ArrayBuffer[Double]()
-    val fullEffR = scala.collection.mutable.ArrayBuffer[Double]()
-    val canBefore = scala.collection.mutable.ArrayBuffer[Double]()
-    val canAfter = scala.collection.mutable.ArrayBuffer[Double]()
+    val susLoR = ArrayBuffer[Double]()
+    val susHiR = ArrayBuffer[Double]()
+    val effR = ArrayBuffer[Double]()
+    val fullLoR = ArrayBuffer[Double]()
+    val fullHiR = ArrayBuffer[Double]()
+    val fullEffR = ArrayBuffer[Double]()
+    val canaries = new Kit.CanaryLog
     (1 to reps).foreach { r =>
-      if (r > 1) coolDown()
-      canBefore += gateCanary(s"rep$r")
+      canaries.enter()
       // alternate which side runs first so a monotone host-throttle drift
       // within a pair can't systematically favour one side
       val loFirst = r % 2 == 1
-      def runLo() = run(2, srcDir, root, s"lo$r")
-      def runHi() = run(8, srcDir, root, s"hi$r")
-      val (resLo, resHi) =
+      def runLo() = run(2, c.src, root, s"lo$r")
+      def runHi() = run(8, c.src, root, s"hi$r")
+      val (lo, hi) =
         if (loFirst) { val a = runLo(); (a, runHi()) }
         else { val b = runHi(); (runLo(), b) }
-      val (rl, sl, srl, ssl, sal) = resLo
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG") && r == 1) {
-        val sp = session(4)
-        import org.apache.spark.sql.functions.col
-        val got = new ExactlyOnceSink(s"$root/out_lo$r").read(sp)
-          .select("game_id", "event_id", "type_name", "time_seconds")
-          .collect().map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
-        val truthKeys = (0 until games).flatMap { i =>
-          val g = FixtureGen.game(i, perGame)
-          graft.convert.SpadlPipeline.convertDoc(g.doc.doc_id, g.doc.tokens, Nil)
-        }.map(a => Seq[Any](a.game_id, a.event_id, a.type_name, a.time_seconds))
-          .groupBy(identity).map { case (k, v) => k -> v.size }
-        truthKeys.foreach { case (k, n) =>
-          val m = got.getOrElse(k, 0)
-          if (m < n) println(s"[sbench] MISSING $k truth=$n got=$m")
-        }
-        sp.stop()
-      }
-      val (rh, sh, srh, ssh, sah) = resHi
-      require(rl == rh, s"output mismatch lo=$rl hi=$rh")
-      require(rh == truthRows,
-        s"stream output $rh != batch truth $truthRows")
-      // north rule: identical exactly-once output across parallelism levels
-      // AND vs batch — full-content, all fields, order-independent digest
+      require(lo.rows == hi.rows, s"output mismatch lo=${lo.rows} hi=${hi.rows}")
+      require(hi.rows == c.truthRows,
+        s"stream output ${hi.rows} != batch truth ${c.truthRows}")
       if (r == 1) Seq("lo1", "hi1").foreach { tag =>
-        val sp = session(4)
-        import sp.implicits._
-        // hash rows on executors; collect only the longs (the full rows
-        // would blow maxResultSize at 10M+ actions)
-        val digest = digestOf(new ExactlyOnceSink(s"$root/out_$tag").read(sp)
-          .drop("_lineage_partition", "_batch_id")
-          .as[graft.model.ValuedAction].map(_.hashCode.toLong)
-          .collect().toSeq)
-        sp.stop()
-        require(digest == truthDigest,
-          s"$tag sink content digest $digest != batch truth $truthDigest")
+        checkDigest(root, tag, c)
         println(s"[sbench] $tag content digest OK")
       }
-      rows = rh
-      secLo = math.min(secLo, sl)
-      secHi = math.min(secHi, sh)
-      susLo = math.max(susLo, srl / ssl)
-      susHi = math.max(susHi, srh / ssh)
-      susLoR += srl / ssl
-      susHiR += srh / ssh
+      rows = hi.rows
+      val sl = lo.dataRows / lo.dataSec
+      val sh = hi.dataRows / hi.dataSec
+      secLo = math.min(secLo, lo.wallSec)
+      secHi = math.min(secHi, hi.wallSec)
+      susLo = math.max(susLo, sl)
+      susHi = math.max(susHi, sh)
+      susLoR += sl
+      susHiR += sh
       // per-rep efficiency: lo and hi of one rep run back-to-back, so a
       // host-throttle wave hits both sides of the PAIR — the ratio is far
       // more drift-robust than ratios of independently-taken extremes
-      effR += (srh / ssh) / (4.0 * (srl / ssl))
+      effR += sh / (4.0 * sl)
       // full-pipeline sustained: events over TOTAL busy batch time (ingest
       // batch + state-timeout emission batch + empty flushes) — the
       // steady-state rate of a continuous stream, which interleaves ingest
       // and emission every trigger; the ingest-only number above isolates
       // the shuffle-facing half
-      val fl = nEvents / sal
-      val fh = nEvents / sah
+      val fl = c.events / lo.busySec
+      val fh = c.events / hi.busySec
       fullLoR += fl
       fullHiR += fh
       fullEffR += fh / (4.0 * fl)
-      canAfter += canaryFactor()
-      println(f"""[sbench rep $r${if (loFirst) "" else " hi-first"}] sustained(ingest) lo=${srl / ssl}%.0f hi=${srh / ssh}%.0f ev/s eff=${effR.last}%.3f | full-pipeline lo=$fl%.0f hi=$fh%.0f ev/s eff=${fullEffR.last}%.3f | wall lo=$sl%.1f hi=$sh%.1f s | canary ${canBefore.last}%.2f->${canAfter.last}%.2f""")
+      canaries.leave()
+      println(f"""[sbench rep $r${if (loFirst) "" else " hi-first"}] sustained(ingest) lo=$sl%.0f hi=$sh%.0f ev/s eff=${effR.last}%.3f | full-pipeline lo=$fl%.0f hi=$fh%.0f ev/s eff=${fullEffR.last}%.3f | wall lo=${lo.wallSec}%.1f hi=${hi.wallSec}%.1f s | canary ${canaries.before.last}%.2f->${canaries.after.last}%.2f""")
     }
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2)
-      else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-    }
-    val medLo = median(susLoR.toSeq)
-    val medHi = median(susHiR.toSeq)
+    val medLo = Kit.median(susLoR.toSeq)
+    val medHi = Kit.median(susHiR.toSeq)
     val eff = (rows / secHi) / (4.0 * (rows / secLo))
     val susEff = susHi / (4.0 * susLo)
-    val medEff = median(effR.toSeq)
-    val fullMedLo = median(fullLoR.toSeq)
-    val fullMedHi = median(fullHiR.toSeq)
+    val medEff = Kit.median(effR.toSeq)
+    val fullMedLo = Kit.median(fullLoR.toSeq)
+    val fullMedHi = Kit.median(fullHiR.toSeq)
     // PRIMARY north-rule metric: median of paired-rep full-pipeline ratios
-    val fullMedEff = median(fullEffR.toSeq)
-    // throttle-clean subset: reps whose canary read clean BOTH entering and
-    // leaving the pair — the artifact-level adjudication of host state
-    val clean = (0 until reps).filter(i =>
-      canBefore(i) <= canaryThreshold && canAfter(i) <= canaryThreshold)
+    val fullMedEff = Kit.median(fullEffR.toSeq)
+    val clean = canaries.clean
     // honest nulls when no rep was canary-clean (round-5 ADVICE): a
     // clean_* field must never alias the unfiltered median
     val fullCleanEff =
-      if (clean.nonEmpty) f"${median(clean.map(fullEffR))}%.3f" else "null"
+      if (clean.nonEmpty) f"${Kit.median(clean.map(fullEffR))}%.3f" else "null"
     val susCleanEff =
-      if (clean.nonEmpty) f"${median(clean.map(effR))}%.3f" else "null"
-    val stateName =
-      if (sys.env.get("GRAFT_STATE").contains("rocksdb")) "rocksdb"
-      else "hdfs-heap"
-    println(f"""{"stream_bench":{"state_store":"$stateName","cpuset":${sys.env.contains("SPARK_GRAFT_CPUSET")},"games":$games,"event_rows":$nEvents,"action_rows":$rows,"cores_lo":2,"cores_hi":8,"wall_rows_per_sec_lo":${rows / secLo}%.1f,"wall_rows_per_sec_hi":${rows / secHi}%.1f,"wall_efficiency":$eff%.3f,"sustained_events_per_sec_lo":$susLo%.1f,"sustained_events_per_sec_hi":$susHi%.1f,"sustained_efficiency":$susEff%.3f,"sustained_median_lo":$medLo%.1f,"sustained_median_hi":$medHi%.1f,"paired_rep_efficiencies":[${effR.map(e => f"$e%.3f").mkString(",")}],"sustained_median_efficiency":$medEff%.3f,"full_pipeline_lo":$fullMedLo%.1f,"full_pipeline_hi":$fullMedHi%.1f,"full_pipeline_rep_efficiencies":[${fullEffR.map(e => f"$e%.3f").mkString(",")}],"full_pipeline_median_efficiency":$fullMedEff%.3f,"canary_ref_sec":${graft.Bench.CanaryRefSec}%.3f,"canary_threshold":$canaryThreshold%.2f,"canary_before":[${canBefore.map(c => f"$c%.2f").mkString(",")}],"canary_after":[${canAfter.map(c => f"$c%.2f").mkString(",")}],"clean_reps":${clean.size},"sustained_clean_median_efficiency":$susCleanEff,"full_pipeline_clean_median_efficiency":$fullCleanEff,"reps":$reps}}""")
+      if (clean.nonEmpty) f"${Kit.median(clean.map(effR))}%.3f" else "null"
+    def list(xs: Seq[Double]) = xs.map(e => f"$e%.3f").mkString("[", ",", "]")
+    println(f"""{"stream_bench":{"state_store":"$stateName","cpuset":$cpuset,"games":$games,"event_rows":${c.events},"action_rows":$rows,"cores_lo":2,"cores_hi":8,"wall_rows_per_sec_lo":${rows / secLo}%.1f,"wall_rows_per_sec_hi":${rows / secHi}%.1f,"wall_efficiency":$eff%.3f,"sustained_events_per_sec_lo":$susLo%.1f,"sustained_events_per_sec_hi":$susHi%.1f,"sustained_efficiency":$susEff%.3f,"sustained_median_lo":$medLo%.1f,"sustained_median_hi":$medHi%.1f,"paired_rep_efficiencies":${list(effR.toSeq)},"sustained_median_efficiency":$medEff%.3f,"full_pipeline_lo":$fullMedLo%.1f,"full_pipeline_hi":$fullMedHi%.1f,"full_pipeline_rep_efficiencies":${list(fullEffR.toSeq)},"full_pipeline_median_efficiency":$fullMedEff%.3f,"canary_ref_sec":${graft.Bench.CanaryRefSec}%.3f,"canary_threshold":${Kit.CleanCanary}%.2f,"canary_before":${canaries.list(canaries.before)},"canary_after":${canaries.list(canaries.after)},"clean_reps":${clean.size},"sustained_clean_median_efficiency":$susCleanEff,"full_pipeline_clean_median_efficiency":$fullCleanEff,"reps":$reps}}""")
   }
 }

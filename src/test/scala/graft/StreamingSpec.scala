@@ -4,6 +4,7 @@ import graft.convert.SpadlPipeline
 import graft.fixtures.FixtureGen
 import graft.model._
 import graft.streaming.{ExactlyOnceSink, SpadlStream, StreamJob}
+import graft.streaming.SpadlStream.sentinel
 import graft.vaep.ValuationCore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -42,11 +43,7 @@ abstract class StreamingContractSpec extends AnyFunSuite {
     s
   }
 
-  private val Base = 1704067200000L
-  private def sentinel(i: Int, plusDays: Int): SpadlStream.StreamEvent =
-    SpadlStream.StreamEvent(s"99$i", "opta", 0, 10, i,
-      new Timestamp(Base + plusDays * 86400000L), Array(1, 1, 3, 0, 0, 1, 10,
-        1, 5000, 5000, 0), None) // period 3: filtered by P1, emits nothing
+  private val Base = SpadlStream.BaseEpochMs
 
   /** Batch truth: convert+value via the pure cores. */
   private def batchTruth(games: Seq[FixtureGen.Game]): Seq[ValuedAction] =
@@ -124,7 +121,10 @@ abstract class StreamingContractSpec extends AnyFunSuite {
   }
 
   test("stream-stream keypass join sets assist/keypass flags like batch") {
-    val games = FixtureGen.corpus(4, 100).filter(_.doc.source == "opta")
+    // the 400-event game reaches period 2, whose keypasses the join must
+    // match on the second-half stream clock too
+    val games = (FixtureGen.corpus(4, 100) :+ FixtureGen.game(4, 400))
+      .filter(_.doc.source == "opta")
     assert(games.exists(_.keypasses.nonEmpty), "fixture has keypasses")
     val lost = spark.sparkContext.longAccumulator("lost_kp_upgrades")
     val truth = batchTruth(games).sortBy(key)
